@@ -278,14 +278,14 @@ def main() -> None:
         ),
     )
     # round-8 addition: leakage-safe split end-to-end — LSH pair graph,
-    # two-phase CC, cluster-keyed assignment, straddle audit. The
+    # connected components, cluster-keyed assignment, straddle audit. The
     # minhash stage above prices the pair graph alone; this stage is
     # the whole dedup-then-split step a pretraining pipeline runs.
     def _leak_probe():
         pairs = D.minhash_lsh_pairs(
             docs, num_hashes=64, bands=16, threshold=0.5
         ).localCheckpoint()
-        clusters = D.neardup_clusters_twophase(docs, pairs)
+        clusters = D.neardup_clusters(docs, pairs)
         w = {"train": 0.8, "val": 0.1, "test": 0.1}
         naive = SAMP.assign_split(docs.select("doc_id"), ["doc_id"], w, salt="probe")
         safe = SAMP.leakage_safe_assign(docs.select("doc_id"), clusters, w, salt="probe")

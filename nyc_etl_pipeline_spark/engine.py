@@ -31,13 +31,11 @@ from nyc_etl_pipeline_spark.pipeline import (
     build_date_dim,
     build_fact,
     clean_trips,
-    monthly_report,
     seed_payment_dim,
     seed_rate_dim,
     seed_type_dim,
     seed_vendor_dim,
     upsert_dim,
-    weekly_report,
     zone_dim,
 )
 from nyc_etl_pipeline_spark.pipeline.dims import dim_candidates
@@ -91,7 +89,7 @@ class Engine:
         self.wh.overwrite(vendors, "dim_vendor")
         rates = upsert_dim(
             self._existing("dim_rate", seed_rate_dim(spark)),
-            dim_candidates([silver.withColumnRenamed("RatecodeID", "RatecodeID")], "RatecodeID"),
+            dim_candidates([silver], "RatecodeID"),
             "RatecodeID",
             "RatecodeName",
             "Unknown Ratecode",
@@ -125,15 +123,17 @@ class Engine:
         # parquet mid-write.
         if self.wh.exists(table):
             df = self.wh.read(table)
-            n = df.count()
-            if n > self.MAX_DIM_ROWS:
+            # limit + 1 bounds the collect itself: one job, never more
+            # than MAX_DIM_ROWS + 1 rows on the driver
+            rows = df.limit(self.MAX_DIM_ROWS + 1).collect()
+            if len(rows) > self.MAX_DIM_ROWS:
                 raise ValueError(
-                    f"dim table {table!r} has {n} rows > MAX_DIM_ROWS="
-                    f"{self.MAX_DIM_ROWS}: dims are materialized to the "
+                    f"dim table {table!r} has more than MAX_DIM_ROWS="
+                    f"{self.MAX_DIM_ROWS} rows: dims are materialized to the "
                     f"driver for same-path overwrite, so an unbounded dim "
                     f"indicates corrupt upstream keys — refusing the collect."
                 )
-            return self.spark.createDataFrame(df.collect(), df.schema)
+            return self.spark.createDataFrame(rows, df.schema)
         return seed
 
     # ---- fact ------------------------------------------------------------

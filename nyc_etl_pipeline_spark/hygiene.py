@@ -220,8 +220,3 @@ def new_epoch(tag: str | None = None) -> int:
 def release_all() -> None:
     """Release everything registered (session teardown / tests)."""
     _release(_EPOCH)
-
-
-def registered_count() -> int:
-    with _LOCK:
-        return len(_ENTRIES)

@@ -42,23 +42,6 @@ def minhash_base_coeffs(i: int) -> tuple[int, int]:
     return a, b
 
 
-def release_caches(spark) -> None:
-    """Deterministically release the persist()-cached intermediates the
-    dedup operators leave behind (shingle tables, simhash signatures).
-    The operators return LAZY DataFrames, so they cannot unpersist
-    their own caches; blocks are MEMORY_AND_DISK and LRU-evicted under
-    pressure, so calling this is optional hygiene for long-lived
-    sessions between corpus-scale passes. It clears the session's
-    ENTIRE dataframe cache (spark.catalog.clearCache()) — call it
-    between passes, not while results are still being consumed.
-
-    Why not checkpoint-based self-cleanup: measured in r7,
-    localCheckpoint(eager=False) in place of persist() cost 1.8-4x
-    per invocation across the dedup family (row-serialized, statless
-    blocks vs the columnar InMemoryRelation)."""
-    spark.catalog.clearCache()
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """One row per distinct text: canonical (min) id + copy count.
 
@@ -432,7 +415,7 @@ def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     needs a collision between two distinct shingles in the same pair
     (~n_shingles^2 / 2^61 — negligible at any realistic corpus). The
     hash is `md5_long`, reproducible outside Spark, so every consumer
-    (q18/q23/q41/q47/q51/q52) stays DuckDB-oracle-checkable end to end.
+    (q18/q23/q41/q47/q51) stays DuckDB-oracle-checkable end to end.
 
     Tokenization is staged as its own projection so the token array is
     computed once per document (see shingles_from_tokens — 14x)."""
@@ -475,8 +458,7 @@ def ngram_jaccard_pairs(
     # q18 1.5->2.7 s at sf0.1) — RDD checkpoint blocks are
     # row-serialized and carry no stats, losing the columnar cache and
     # degrading downstream join choice. The cache entry outlives the
-    # result until LRU eviction; long sweeps can clearCache() between
-    # corpus passes (see release_caches).
+    # result until hygiene's epoch registry releases it.
     sh = sh.transform(scratch_persist)
     sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
 
@@ -672,18 +654,6 @@ def _minhash_sig_table(sh: DataFrame, num_hashes: int, id_out: str) -> DataFrame
     return sh.groupBy(F.col("__id").alias(id_out)).agg(
         *_minhash_signature_cols(num_hashes)
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 128,
-) -> DataFrame:
-    """(id, mh_0..mh_{k-1}) MinHash signatures over word n-grams."""
-    sh = _shingle_table(df, id_col, text_col, n)
-    return _minhash_sig_table(sh, num_hashes, id_col)
 
 
 def _melt_bands(sig: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -1141,63 +1111,6 @@ def minhash_lsh_pairs(
     )
 
 
-def neardup_clusters(
-    nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Connected components over near-dup pairs: every document gets a
-    cluster representative (the minimum doc id reachable through the
-    pair graph) — the canonical-document selection step of a dedup
-    pipeline. Singletons are their own representative.
-
-    Iterative min-label propagation to fixpoint; near-dup components
-    have tiny diameters so this converges in a few rounds. Each round
-    localCheckpoints to truncate lineage (iterative plans otherwise
-    grow unboundedly). For billion-edge graphs swap in the
-    large-star/small-star formulation — same DataFrame-only shape.
-    """
-    edges = pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst")).unionByName(
-        pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
-    )
-    edges = edges.localCheckpoint()
-    labels = nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("label")).localCheckpoint()
-    prev_ck = labels  # the checkpoint handle backing `labels`
-    while True:
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        # carry the previous label through the round: the fixpoint
-        # probe then counts changed rows off the new table's OWN
-        # checkpoint blocks instead of re-joining old vs new label
-        # tables (one node-sized join per round removed — §2.4; the
-        # count's input was already materialized by the eager
-        # checkpoint, so the probe is a block scan)
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
-                F.col("label").alias("__old"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("label") != F.col("__old")).count()
-        # the fixpoint count was this round's action: the PREVIOUS
-        # label table's checkpoint blocks are now provably dead
-        release_checkpoint_now(prev_ck)
-        prev_ck = new_labels
-        labels = new_labels.select("node", "label")
-        if changed == 0:
-            break
-    # edges fed only the loop (the returned plan reads the final eager
-    # label checkpoint); the final labels live until the caller's
-    # action -> epoch-released
-    release_checkpoint_now(edges)
-    register_checkpointed(prev_ck)
-    return labels.select(F.col("node").alias(id_col), F.col("label").alias("cluster_rep"))
-
-
 def contamination_scores(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -1255,23 +1168,28 @@ def contamination_scores(
     )
 
 
-def neardup_clusters_twophase(
-    nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id", max_rounds: int = 50
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the billion-edge scale path promised by `neardup_clusters`'
-    docstring, produced here with the same output contract
-    (doc_id, cluster_rep = component minimum; singletons included).
+# Large-star/small-star converges in O(log n) rounds, so this covers
+# any graph that fits on hardware; hitting it is a bug or bad input.
+CC_MAX_ROUNDS = 50
 
-    Why a second algorithm: min-label propagation converges in
-    O(diameter) rounds, each shipping the FULL edge list through a
-    join — fine for near-dup graphs (tiny diameters), hopeless for
-    long chains. Large-star/small-star converges in O(log n) rounds
-    and — crucially for skew — each round REWRITES the edge list into
-    a flatter one, so hot nodes shed degree as roots absorb their
-    components. Both rounds are one groupBy + one join over the
+
+def neardup_clusters(
+    nodes: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """Connected components over near-dup pairs: every document gets a
+    cluster representative (the minimum doc id reachable through the
+    pair graph) — the canonical-document selection step of a dedup
+    pipeline. Returns (id_col, cluster_rep); singletons are their own
+    representative.
+
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond"). It converges in O(log n)
+    rounds, where min-label propagation needs one full edge join per
+    unit of diameter, and each round REWRITES the edge list into a
+    flatter one, so hot nodes shed degree as roots absorb their
+    components. Both stars are one groupBy + one join over the
     current edges; nothing driver-side except the fixpoint check.
+    Each round localCheckpoints to truncate lineage.
 
     large-star: every node u links its LARGER neighbors to
       m(u) = min(N(u) ∪ {u});
@@ -1289,8 +1207,7 @@ def neardup_clusters_twophase(
         .dropDuplicates()
         .localCheckpoint()
     )
-    converged = False
-    for _ in range(max_rounds):
+    for _ in range(CC_MAX_ROUNDS):
         # ---- large-star on the symmetric view -------------------------
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         m = sym.groupBy("u").agg(F.min("v").alias("__mn"))
@@ -1318,22 +1235,18 @@ def neardup_clusters_twophase(
             .dropDuplicates()
             .localCheckpoint()  # truncate per-round lineage
         )
-        if e2.exceptAll(e).union(e.exceptAll(e2)).isEmpty():
-            release_checkpoint_now(e)
-            e = e2
-            converged = True
-            break
+        fixpoint = e2.exceptAll(e).union(e.exceptAll(e2)).isEmpty()
         # the fixpoint probe was this round's action: the previous
         # edge table's checkpoint blocks are now provably dead
         release_checkpoint_now(e)
         e = e2
-    if not converged:
+        if fixpoint:
+            break
+    else:
         # Returning labels from a non-fixpoint edge set would be
         # silently WRONG (stars not yet rooted at component minima).
-        # O(log n) convergence means max_rounds=50 covers any graph
-        # that fits on hardware; hitting this is a bug or bad input.
         raise RuntimeError(
-            f"large-star/small-star did not converge in {max_rounds} rounds"
+            f"large-star/small-star did not converge in {CC_MAX_ROUNDS} rounds"
         )
     # at fixpoint: stars rooted at component minima -> rep = min neighbor
     # (the final edge checkpoint feeds the returned plan -> epoch-released)
@@ -1508,8 +1421,8 @@ def canonical_per_cluster(
     deterministic). Output carries cluster_rep, the winner's id and
     score, and the cluster size.
 
-    clusters is (id_col, cluster_rep) as produced by neardup_clusters
-    / neardup_clusters_twophase. Scale: one shuffle on cluster_rep;
+    clusters is (id_col, cluster_rep) as produced by
+    neardup_clusters. Scale: one shuffle on cluster_rep;
     the per-cluster window sorts only that cluster's members (near-dup
     clusters are small by construction — a pathological giant cluster
     means the pairing threshold is wrong, not the plan).

@@ -145,10 +145,9 @@ def leakage_safe_assign(
     standard fix (the dedup-then-split step of LLM data pipelines).
 
     `clusters` is (id_col, rep_col) as produced by
-    dedup.neardup_clusters / neardup_clusters_twophase (singletons
-    included — every doc has a row). Docs missing from `clusters` are
-    treated as singletons (rep = own id), so a pair-graph-only cluster
-    map also works.
+    dedup.neardup_clusters (singletons included — every doc has a
+    row). Docs missing from `clusters` are treated as singletons
+    (rep = own id), so a pair-graph-only cluster map also works.
 
     Scale shape: one equi join on the doc id (sort-merge/shuffle-hash;
     both sides are corpus-sized and co-keyed) followed by a pure

@@ -21,10 +21,8 @@ key), so ``Engine.run_reports`` scans the fact once and shuffles it
 once instead of twice. This wins exactly when the report grain barely
 compresses the fact (the reference's 36M-row yellow crash case:
 near-uniform keys mean map-side combine removes almost nothing, so
-the second groupBy shuffle is pure waste). For heavily compressing
-key distributions the classic per-mart partial+final agg shuffles
-fewer bytes — the standalone ``monthly_report``/``weekly_report``
-keep that plan.
+the second groupBy shuffle is pure waste). ``monthly_report`` and
+``weekly_report`` are the single-mart compositions of the same path.
 """
 
 from __future__ import annotations
@@ -196,24 +194,8 @@ def monthly_report(
     dim_rate: DataFrame,
 ) -> DataFrame:
     """platinum.py:69-154 — group by 7 keys incl. pickup month."""
-    dd = F.broadcast(
-        dim_date.select(F.col("dateID").alias("date_puID"), F.col("month").alias("month_pu"))
-    )
-    grouped = (
-        fact.join(dd, on="date_puID", how="inner")
-        .groupBy(
-            "PULocationID",
-            "DOLocationID",
-            "typeID",
-            "VendorID",
-            "month_pu",
-            "RatecodeID",
-            "paymentID",
-        )
-        .agg(*_aggregates())
-    )
-    return _decorate(
-        grouped, zone, dim_type, dim_vendor, dim_payment, dim_rate, ["month_pu"]
+    return monthly_from_base(
+        shared_report_base(fact, dim_date), zone, dim_type, dim_vendor, dim_payment, dim_rate
     )
 
 
@@ -227,33 +209,6 @@ def weekly_report(
     dim_rate: DataFrame,
 ) -> DataFrame:
     """platinum.py:166-252 — keys swap month for dayOfWeek+weekOfYear."""
-    dd = F.broadcast(
-        dim_date.select(
-            F.col("dateID").alias("date_puID"),
-            F.col("dayOfWeek").alias("dayOfWeek_pu"),
-            F.col("weekOfYear").alias("weekOfYear_pu"),
-        )
-    )
-    grouped = (
-        fact.join(dd, on="date_puID", how="inner")
-        .groupBy(
-            "PULocationID",
-            "DOLocationID",
-            "typeID",
-            "VendorID",
-            "dayOfWeek_pu",
-            "weekOfYear_pu",
-            "RatecodeID",
-            "paymentID",
-        )
-        .agg(*_aggregates())
-    )
-    return _decorate(
-        grouped,
-        zone,
-        dim_type,
-        dim_vendor,
-        dim_payment,
-        dim_rate,
-        ["dayOfWeek_pu", "weekOfYear_pu"],
+    return weekly_from_base(
+        shared_report_base(fact, dim_date), zone, dim_type, dim_vendor, dim_payment, dim_rate
     )

@@ -52,120 +52,6 @@ def _with_epoch(fn: Callable[[SparkSession, str], DataFrame]):
     return wrapped
 
 
-# name -> most recent driver round with a GREEN CORRECTNESS row. The
-# driver gate only checks the FIRST 50 entries of all_specs(): ordering
-# never-driver-checked queries first rotates fresh evidence into that
-# window (VERDICT r4 item 1), and — now that every gate query has been
-# driver-checked at least once — ordering the rest OLDEST-evidence-first
-# re-verifies the q01-era rows whose green predates later refactors such
-# as the r5 decimal-accumulation migration (VERDICT r6 item 3). Red rows
-# do NOT earn an entry: q125 stayed fresh through r6 (`err: no_oracle`).
-# Rounds 1-4 era rows are recorded as 4 (last round that could have
-# re-verified them before the r5 migration); exact earlier rounds don't
-# change the ordering.
-_DRIVER_EVIDENCE: dict[str, int] = {
-    # q42_percentiles: demoted from the gate in r5 (pytest anchor for
-    # q58); removed here when the window-invariant test flagged it stale.
-    # rounds 1-4 era (CORRECTNESS_r01-r04) — still awaiting post-r5-decimal
-    # re-verification; the rotation leads with these.
-    "q57_arrow_zscore": 8, "q69_window_gauntlet": 8, "q70_gapfill_hours": 8,
-    "q75_ewma": 8, "q77_salted_agg": 8, "q78_scd2_intervals": 8,
-    "q79_session_window": 8, "q84_anomaly_bands": 8, "q85_variant_props": 8,
-    "q89_xml_roundtrip": 8, "q90_activity_streaks": 8, "q91_latest_wins": 8,
-    "q92_ratio_to_report": 8,
-    # round-5 green rows (CORRECTNESS_r05.json)
-    "q51_contamination": 11, "q52_cc_twophase": 11, "q53_text_normalize": 11,
-    "q54_pii_redact": 11, "q55_funnel": 8, "q58_percentiles_sorted": 8,
-    "q60_cohort_retention": 8, "q61_tpch_q3": 8, "q62_tpch_q5": 8,
-    "q63_tpch_q10": 8, "q64_tpch_q18": 8, "q65_sequence_pack": 8,
-    "q66_stratified_sample": 8, "q67_repetition_stats": 8,
-    "q68_shard_shuffle": 8, "q71_url_parse": 8, "q72_domain_stats": 8,
-    "q73_token_zipf": 8, "q74_quality_deciles": 8, "q80_sketch_rollup": 8,
-    "q81_per_key_sample": 8, "q82_chunk_windows": 8, "q83_tpch_q21": 8,
-    "q86_grouping_sets": 8, "q87_fuzzy_pairs": 8, "q88_tpch_q22": 9,
-    "q93_tpch_q2": 9, "q94_tpch_q4": 9, "q95_tpch_q11": 9, "q96_tpch_q13": 9,
-    "q97_tpch_q15": 9, "q98_tpch_q16": 9, "q99_tpch_q17": 9,
-    "q100_tpch_q20": 9, "q101_pq_clustered": 9, "q102_tpch_q6": 9,
-    "q103_tpch_q7": 9, "q104_tpch_q8": 9, "q105_tpch_q9": 9,
-    "q107_tpch_q14": 9, "q108_tpch_q19": 9, "q109_bm25_topk": 9,
-    "q110_boolean_search": 9, "q111_weighted_sample": 9,
-    "q112_cluster_canonical": 9, "q113_unigram_nll": 9,
-    "q114_triangle_clustering": 9,
-    # round-6 green rows (CORRECTNESS_r06.json)
-    "q01_monthly_sales_report": 9, "q50_split_assign": 9,
-    "q76_pagerank_nations": 9, "q106_tpch_q12": 9, "q115_label_cohesion": 9,
-    "q116_pmi_collocations": 9, "q117_dq_expectations": 9,
-    "q118_recursive_bfs": 9, "q119_passage_dedup": 9,
-    "q120_incremental_mart": 9, "q121_psi_drift": 9, "q122_zorder_key": 9,
-    "q123_semantic_dedup": 9, "q124_cms_heavy_hitters": 9,
-    "q126_mixture_sample": 9, "q127_incremental_neardup": 10,
-    "q128_containment_pairs": 10, "q129_interval_overlap": 10,
-    "q130_trend_fit": 10, "q131_radius_pairs": 10, "q132_session_transitions": 10,
-    "q133_twap": 10, "q134_running_distinct": 10, "q135_hist_quantiles": 10,
-    "q136_salted_join": 10, "q137_bpe_encode": 10, "q138_token_budget": 10,
-    "q139_cdc_apply": 10, "q140_source_quantiles": 10, "q141_jaccard_prefix": 10,
-    "q142_mad_outliers": 10, "q143_skyline": 10, "q144_rolling_median": 10,
-    "q145_jl_project": 10, "q146_weighted_median": 10, "q147_session_lift": 10,
-    "q148_ip_cidr": 10, "q149_table_diff": 10, "q150_capped_sessions": 10,
-    "q151_tfidf_keywords": 10, "q152_winsorize": 10, "q153_benford": 10,
-    "q154_phrase_search": 10, "q155_feature_hashing": 10,
-    "q156_join_maintenance": 10, "q157_ks_drift": 10, "q158_theil_sen": 10,
-    "q159_gini": 10, "q160_source_overlap": 10,
-    # round-7 green rows (CORRECTNESS_r07.json, 50/50 — includes the
-    # first driver evidence for q125_bpe_merges and q161_phrase_slop)
-    "q02_weekly_sales_report": 10, "q03_clean_project": 10,
-    "q04_dim_upsert_anti": 10, "q05_watermark_incremental": 10,
-    "q06_date_dim": 10, "q07_fact_datejoin": 10, "q08_top_customers": 11,
-    "q09_window_rank": 11, "q10_rollup": 11, "q11_semi_join": 11,
-    "q12_pivot_linestatus": 11, "q13_events_tumbling": 11,
-    "q14_events_sliding": 11, "q15_sessionize": 11, "q16_json_extract": 11,
-    "q17_exact_dedup": 11, "q18_ngram_jaccard_pairs": 11,
-    "q19_text_quality": 11, "q20_lang_id": 11, "q21_doc_fingerprint": 11,
-    "q22_multimodal_bytes": 11, "q23_minhash_lsh_pairs": 11,
-    "q24_simhash_near_pairs": 11, "q25_embedding_topk": 11,
-    "q26_embedding_neardup": 11, "q27_lsh_bucketed_pairs": 11,
-    "q28_asof_join": 11, "q29_range_join": 11, "q30_cube": 11,
-    "q31_unpivot": 11, "q32_set_ops": 11, "q33_distinct_aggs": 11,
-    "q34_approx_aggs": 11, "q35_ivf_topk": 11, "q36_grouped_map_zscore": 11,
-    "q37_grouped_agg_geomean": 11, "q38_correlated_subquery": 11,
-    "q39_string_gauntlet": 11, "q40_datetime_gauntlet": 11,
-    "q41_neardup_clusters": 11, "q43_tpch_q1": 11, "q44_data_profile": 11,
-    "q45_array_ops": 11, "q46_udtf_word_counts": 11,
-    "q47_ngram_jaccard_capped": 11, "q48_incremental_dedup": 11,
-    "q49_outer_joins": 11, "q56_sq8_topk": 11, "q125_bpe_merges": 11,
-    "q161_phrase_slop": 11,
-    # round-8 green rows (CORRECTNESS_r08.json, 50/50 — first driver
-    # evidence for the 13 r8 additions q162-q173)
-    "q162_kcore": 8, "q163_label_prop": 8, "q164_dsir_importance": 8,
-    "q165_kmeans": 8, "q166_heavy_hitters": 8, "q167_leakage_safe_split": 8,
-    "q168_split_leakage_audit": 8, "q169_boilerplate_strip": 8,
-    "q170_hybrid_rrf": 8, "q171_quality_logreg": 8, "q172_hard_negatives": 8,
-    "q173_mmr_rerank": 8,
-    # round-9 green rows (CORRECTNESS_r09.json, 50/50 — first driver
-    # evidence for the 13 r9 additions q174-q186)
-    "q174_holt_smoothing": 9, "q175_maintained_ivf": 9,
-    "q176_maintained_neardup": 9, "q177_bloom_contamination": 9,
-    "q178_sparse_cosine": 9, "q179_bigram_nll": 9, "q180_cluster_reps": 9,
-    "q181_bucketed_join": 9, "q182_adamic_adar": 9, "q183_mixture_plan": 9,
-    "q184_roc_auc": 9, "q185_calibration": 9, "q186_retrieval_eval": 9,
-    # round-10 green rows (CORRECTNESS_r10.json, 50/50 — first driver
-    # evidence for the 10 r10 additions q187-q196)
-    "q187_maintained_hll": 10, "q188_substring_dedup": 10,
-    "q189_grouped_calibration": 10, "q190_softmax_langid": 10,
-    "q191_substring_removal": 10, "q192_maintained_mg": 10,
-    "q193_avg_precision": 10, "q194_spearman": 10, "q195_maintained_mart": 10,
-    "q196_global_auc": 10,
-    # round-11 green rows (CORRECTNESS_r11.json, 50/50 — first driver
-    # evidence for the 2 r11 additions q197/q198; the 48 re-greened
-    # oldest-evidence rows above moved from 7/8 to 11 in place)
-    "q197_mart_compaction_lifecycle": 11, "q198_graded_retrieval_eval": 11,
-}
-
-# Backwards-compatible view used by the window-invariant test and the
-# fresh/seen partition below.
-_DRIVER_CHECKED: frozenset[str] = frozenset(_DRIVER_EVIDENCE)
-
-
 def all_specs() -> list[QuerySpec]:
     from nyc_etl_pipeline_spark.suite import (
         advanced,
@@ -200,30 +86,7 @@ def all_specs() -> list[QuerySpec]:
         + corpus.SPECS
         + graphq.SPECS
     )
-    # Stable partition: never-driver-checked first (so they land inside the
-    # driver's 50-query window), previously-green rows after, ordered
-    # OLDEST driver evidence first so each round's unused window slots
-    # re-verify the rows whose green predates the most refactors. Within
-    # each tier, LOWEST query number first — when fresh queries outnumber
-    # the window, the ones waiting longest for driver evidence win a slot
-    # and this round's additions (which just earned fresh local-sweep runs)
-    # wait for the next rotation.
-    def _qnum(name: str) -> int:
-        digits = "".join(ch for ch in name.split("_")[0] if ch.isdigit())
-        return int(digits) if digits else 10**6
-
-    fresh = sorted(
-        (s for s in specs if s.name not in _DRIVER_CHECKED),
-        key=lambda s: _qnum(s.name),
-    )
-    seen = sorted(
-        (s for s in specs if s.name in _DRIVER_CHECKED),
-        key=lambda s: (_DRIVER_EVIDENCE[s.name], _qnum(s.name)),
-    )
-    return [
-        QuerySpec(s.name, _with_epoch(s.fn), s.oracle, s.doc)
-        for s in fresh + seen
-    ]
+    return [QuerySpec(s.name, _with_epoch(s.fn), s.oracle, s.doc) for s in specs]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -198,7 +198,7 @@ def q118_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is nation-pair-bounded (<=625 rows) at every SF, so the
     recursion now iterates over stored blocks; the oracle (and the
     recursive surface itself) are unchanged. The iterative DataFrame
-    formulations of the same idea are q76 (PageRank) and q41/q52
+    formulations of the same idea are q76 (PageRank) and q41
     (connected components); this entry pins the declarative
     recursive-CTE surface."""
     from nyc_etl_pipeline_spark.hygiene import scratch_checkpoint

@@ -1,6 +1,6 @@
 """Training-data-pipeline suite: deterministic split assignment,
-benchmark decontamination, two-phase connected components, text
-normalization, PII redaction, event funnels.
+benchmark decontamination, text normalization, PII redaction, event
+funnels, cluster-aware splits.
 
 These are the curation steps a 100 TB pretraining pipeline runs after
 the dedup family (q17/q18/q23/q24/q41): assign train/val/test,
@@ -25,7 +25,7 @@ from nyc_etl_pipeline_spark.operators import packing
 from nyc_etl_pipeline_spark.operators import sampling
 from nyc_etl_pipeline_spark.operators import text as TX
 from nyc_etl_pipeline_spark.suite import QuerySpec
-from nyc_etl_pipeline_spark.suite.curation import _Q41_SQL, CC_CTES
+from nyc_etl_pipeline_spark.suite.curation import CC_CTES
 from nyc_etl_pipeline_spark.suite.textops import _SHINGLES, _TOKS, JACCARD_THRESHOLD, NGRAM_N
 
 SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -228,20 +228,6 @@ SELECT source,
        ELSE NULL END AS epochs
 FROM ranked
 """
-
-
-# --------------------------------------------------------------------------
-# q52 — connected components, large-star/small-star (billion-edge path)
-# --------------------------------------------------------------------------
-
-def q52_cc_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering task (and same oracle) as q41, computed by the
-    O(log n)-round large-star/small-star algorithm instead of
-    min-label propagation — proving the two independent algorithms
-    agree on the exact pair graph."""
-    docs = read_testdata(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, n=NGRAM_N, threshold=JACCARD_THRESHOLD)
-    return D.neardup_clusters_twophase(docs, pairs)
 
 
 # --------------------------------------------------------------------------
@@ -966,8 +952,6 @@ SPECS = [
               "decontamination via an m-bounded Bloom filter (FPs oracle-replicated)"),
     QuerySpec("q183_mixture_plan", q183_mixture_plan, _Q183_SQL,
               "largest-remainder token-budget allocation (integer-exact quotas)"),
-    QuerySpec("q52_cc_twophase", q52_cc_twophase, _Q41_SQL,
-              "large-star/small-star connected components"),
     QuerySpec("q53_text_normalize", q53_text_normalize, _Q53_SQL,
               "canonical text normalization"),
     QuerySpec("q54_pii_redact", q54_pii_redact, _Q54_SQL,

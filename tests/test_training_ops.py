@@ -1,8 +1,10 @@
 """Training-pipeline operators added in round 3: portable sampling,
-contamination, two-phase CC, normalization, PII redaction, and the
+contamination, connected components, normalization, PII redaction, and the
 stream-stream join (batch parity)."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -10,7 +12,7 @@ from nyc_etl_pipeline_spark.io import read_testdata
 from nyc_etl_pipeline_spark.operators import dedup as D
 from nyc_etl_pipeline_spark.operators import sampling
 from nyc_etl_pipeline_spark.operators import text as TX
-from nyc_etl_pipeline_spark.suite.textops import JACCARD_THRESHOLD, NGRAM_N
+from nyc_etl_pipeline_spark.suite.textops import NGRAM_N
 
 
 # ---- portable sampling ---------------------------------------------------
@@ -116,35 +118,81 @@ def test_bloom_tiny_filter_saturates_to_all_hits(spark):
     assert row["n_hit"] == row["n_shingles"] and row["is_contaminated"]
 
 
-# ---- two-phase connected components --------------------------------------
+# ---- connected components ----------------------------------------------
 
-def test_twophase_cc_matches_label_propagation(spark, sf_dir):
-    docs = read_testdata(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, n=NGRAM_N, threshold=JACCARD_THRESHOLD)
-    a = {(r["doc_id"], r["cluster_rep"]) for r in D.neardup_clusters(docs, pairs).collect()}
-    b = {
-        (r["doc_id"], r["cluster_rep"])
-        for r in D.neardup_clusters_twophase(docs, pairs).collect()
-    }
-    assert a == b
-
-
-def test_twophase_cc_long_chain(spark):
+def test_neardup_clusters_long_chain(spark):
     """A 12-node path graph — worst case for label propagation
     (diameter rounds), the case the O(log n) algorithm exists for."""
     nodes = spark.createDataFrame([Row(doc_id=i) for i in range(12)])
     pairs = spark.createDataFrame(
         [Row(a_id=i, b_id=i + 1) for i in range(11)]
     )
-    out = {r["doc_id"]: r["cluster_rep"] for r in D.neardup_clusters_twophase(nodes, pairs).collect()}
+    out = {r["doc_id"]: r["cluster_rep"] for r in D.neardup_clusters(nodes, pairs).collect()}
     assert out == {i: 0 for i in range(12)}
 
 
-def test_twophase_cc_empty_and_singletons(spark):
+def test_neardup_clusters_empty_and_singletons(spark):
     nodes = spark.createDataFrame([Row(doc_id=i) for i in (5, 7, 9)])
     pairs = spark.createDataFrame([], "a_id long, b_id long")
-    out = {r["doc_id"]: r["cluster_rep"] for r in D.neardup_clusters_twophase(nodes, pairs).collect()}
+    out = {r["doc_id"]: r["cluster_rep"] for r in D.neardup_clusters(nodes, pairs).collect()}
     assert out == {5: 5, 7: 7, 9: 9}
+
+
+def _union_find_reps(n_nodes, edges):
+    parent = list(range(n_nodes))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return [find(x) for x in range(n_nodes)]
+
+
+_GRAPH_ID_STRIDE = 100
+
+
+@st.composite
+def _small_graph(draw):
+    """(n_nodes, edges): random pairs (self-loops, duplicates and both
+    orientations allowed) plus an optional path or cycle laid over a
+    shuffled node order, so long chains whose minimum sits mid-path
+    are common. Nodes no edge touches stay isolated."""
+    n = draw(st.integers(1, 12))
+    node = st.integers(0, n - 1)
+    edges = draw(st.lists(st.tuples(node, node), max_size=n))
+    order = draw(st.permutations(range(n)))
+    shape = draw(st.sampled_from(["random", "path", "cycle"]))
+    if shape != "random":
+        edges += list(zip(order, order[1:]))
+    if shape == "cycle" and n > 2:
+        edges.append((order[-1], order[0]))
+    if edges and draw(st.booleans()):
+        edges += [(b, a) for a, b in edges[: len(edges) // 2 + 1]]
+    return n, edges
+
+
+@settings(max_examples=5, deadline=None)
+@given(st.lists(_small_graph(), min_size=1, max_size=6))
+def test_neardup_clusters_matches_union_find(spark, graphs):
+    """Every random small graph gets the union-find minimum as its
+    representative. The graphs are batched into one Spark call, each
+    in its own id range, so components never cross graphs."""
+    node_rows, pair_rows, want = [], [], {}
+    for g, (n, edges) in enumerate(graphs):
+        base = g * _GRAPH_ID_STRIDE
+        node_rows += [(base + x,) for x in range(n)]
+        pair_rows += [(base + a, base + b) for a, b in edges]
+        for x, rep in enumerate(_union_find_reps(n, edges)):
+            want[base + x] = base + rep
+    nodes = spark.createDataFrame(node_rows, "doc_id long")
+    pairs = spark.createDataFrame(pair_rows, "a_id long, b_id long")
+    got = {r["doc_id"]: r["cluster_rep"] for r in D.neardup_clusters(nodes, pairs).collect()}
+    assert got == want
 
 
 # ---- normalization + PII -------------------------------------------------
