@@ -17,6 +17,12 @@ Each query runs twice and reports the best run: the first execution of
 a plan pays one-off costs (codegen/JIT compilation, AQE statistics, GC
 warm-up, OS page cache) that are not plan properties and made earlier
 single-shot runs unrepresentative under host contention.
+
+Run 2 also reuses run 1's persisted scratch: each build advances the
+hygiene epoch, and releasing keeps the previous KEEP_EPOCHS - 1 = 1
+epoch, so run 1's persist()s are still live when run 2 is built; the
+CacheManager matches run 2's plan-identical persist()s to them.
+localCheckpoint scratch is not shared: run 2 builds and fills its own.
 """
 
 from __future__ import annotations

@@ -1,63 +1,58 @@
-"""Scratch-cache hygiene: bounded, epoch-based release of the
-persist()/localCheckpoint() intermediates operators create while
-building a declared query's plan.
+"""Scratch-cache hygiene: one epoch registry owns every persist() and
+localCheckpoint() intermediate behind a plan an operator returns.
 
-The problem (r12 degradation probe): operators persist or
-localCheckpoint intermediates that feed several branches of the plan
-they RETURN. The consuming action runs later, in the caller, so the
-operator itself has no correct place to unpersist — and without a
-release point every long-lived session accumulates CacheManager
-entries and checkpoint blocks. Measured effect in the 204-query bench:
-late-order queries ran ~2.5-3x their isolated times, and the best-of-2
-policy silently re-read run 1's leaked cache in run 2 (plan-identical
-persists are matched by the CacheManager across separate builds of the
-same query).
+Operators persist or localCheckpoint intermediates that feed several
+branches of the plan they RETURN. The consuming action runs later, in
+the caller, so the operator has no correct place to unpersist; without
+a release point a long-lived session accumulates CacheManager entries
+and checkpoint blocks (late-order bench queries ran ~2.5-3x their
+isolated times before this registry existed).
 
-The contract implemented here:
+The one rule:
 
-* Operators route scratch intermediates through ``scratch_persist(df)``
-  / ``scratch_checkpoint(df, eager=...)`` instead of bare
-  ``persist()`` / ``localCheckpoint()``. Behaviour is identical; the
-  handle is additionally registered with the CURRENT EPOCH.
+* Scratch that backs a returned plan goes through
+  ``scratch_persist(df)`` / ``scratch_checkpoint(df, eager=...)``,
+  which register it with the CURRENT EPOCH. Scratch that lives only
+  inside an operator call uses plain ``persist()`` and an
+  ``unpersist()`` in a ``finally``.
 * The suite registry advances the epoch at the start of every declared
   query's builder (``suite.all_specs`` wraps each fn). Advancing to
   epoch N releases everything registered at epoch <= N - KEEP_EPOCHS.
-* A returned DataFrame is therefore guaranteed re-executable for the
-  epoch it was built in plus the next KEEP_EPOCHS - 1 — which covers
-  every harness flow (bench: build -> action x2 per epoch; driver:
-  build -> collect -> compare; engine: build -> write). Holding a
-  query's result across many OTHER declared-query builds and
-  re-executing it later recomputes persisted scratch (correct, just
-  unaided); checkpointed scratch is only ever released once its blocks
-  have actually been materialized by an action, so an un-run plan is
-  never broken — see _release below for the one usage that can still
-  raise, and why it is out of contract.
+* Plan-identical persists share one CacheManager entry, so a
+  registration expires without unpersisting while a newer registration
+  of the same plan is live: the last one to expire releases the cache.
+* An iterative operator registers each round's checkpoint and calls
+  ``release_now(prev)`` once the next round's is materialized, so a
+  loop that raises leaves only registered scratch behind.
+
+A returned DataFrame is therefore aided for the epoch it was built in
+plus the next KEEP_EPOCHS - 1, which covers every harness flow (bench:
+build -> action per run, one build per run; driver: build -> collect ->
+compare; engine: build -> write). Re-executing it later recomputes
+persisted scratch (correct, just unaided). Checkpoint blocks are only
+released once an action has materialized them (an un-run plan is never
+poisoned), but a checkpoint-backed plan re-executed KEEP_EPOCHS or more
+builds after its own fails with a missing-block error instead of
+recomputing: hold results that long only after materializing them.
 
 Why epochs and not weakrefs: a PySpark DataFrame's Python handle dies
 as soon as the builder returns a derived frame (``df.select(...)``
-holds no reference to ``df``), so finalizers fire before the action —
-the exact opposite of the needed lifetime. Epoch distance is the
-library-visible notion of "two queries later", which IS the lifetime
-the harnesses guarantee.
-
-At 100 TB nothing changes structurally: executors hold the same blocks
-either way; this bounds DRIVER CacheManager growth and storage-memory
-creep in any long-lived session (a multi-tenant notebook, the bench,
-the driver's 50-query sweep) instead of relying on JVM GC to collect
-py4j-held RDD handles, which it does far too late under a large heap.
+holds no reference to ``df``), so finalizers fire before the action.
 """
 
 from __future__ import annotations
 
+import logging
 import threading
 from typing import Any
 
 from pyspark.sql import DataFrame
 
+log = logging.getLogger(__name__)
+
 #: scratch registered at epoch E is released when the epoch counter
-#: reaches E + KEEP_EPOCHS: the query's own actions (bench runs both
-#: of its best-of-2 executions before the next spec's builder runs)
-#: and one full neighbouring epoch stay aided.
+#: reaches E + KEEP_EPOCHS: the query's own actions and one full
+#: neighbouring build stay aided.
 KEEP_EPOCHS = 2
 
 #: an unmaterialized checkpoint entry is re-deferred at most this many
@@ -67,150 +62,125 @@ MAX_DEFERS = 32
 
 _LOCK = threading.RLock()
 _EPOCH = 0
-_LAST_TAG: str | None = None
-# [epoch, kind, payload, defers]: kind "cache" -> PySpark DataFrame to
-# unpersist; kind "ckpt" -> (py4j JavaObject of the checkpointed
-# RDD[InternalRow], DataFrame keeping the plan alive).
+# [epoch, DataFrame, jrdd, defers]: jrdd is None for a persist (release
+# = unpersist the frame), else the py4j handle of the checkpointed
+# RDD[InternalRow] (the frame keeps the handle alive until release).
 _ENTRIES: list[list[Any]] = []
+
+
+def _register(df: DataFrame, jrdd) -> DataFrame:
+    with _LOCK:
+        _ENTRIES.append([_EPOCH, df, jrdd, 0])
+    return df
 
 
 def scratch_persist(df: DataFrame, storage_level=None) -> DataFrame:
     """persist() + register for epoch-based release. Releasing a
     persist is always value-safe (unpersisted frames recompute)."""
     out = df.persist(storage_level) if storage_level is not None else df.persist()
-    with _LOCK:
-        _ENTRIES.append([_EPOCH, "cache", out, 0])
-    return out
-
-
-def _checkpoint_jrdd(df: DataFrame):
-    """The JVM RDD[InternalRow] a localCheckpoint'ed Dataset wraps
-    (its analyzed plan is a LogicalRDD). None if the plan shape is
-    ever not the expected one — release then just skips it."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        return plan.rdd()
-    except Exception:
-        return None
+    return _register(out, None)
 
 
 def scratch_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     """localCheckpoint() + register the underlying RDD for epoch-based
-    release. The RDD's blocks are only ever dropped AFTER they have
-    been materialized by an action (block presence probed via
-    getRDDStorageInfo), so a plan that is never executed is never
-    corrupted; a plan re-executed
-    KEEP_EPOCHS or more declared-query builds after its own is out of
-    the documented lifetime and would fail with a missing-checkpoint-
-    block error rather than silently recompute — callers holding
-    results that long should materialize them (write/collect) first.
-    """
+    release. Its blocks are dropped only after an action has
+    materialized them; see the module docstring for the lifetime."""
     out = df.localCheckpoint(eager=eager)
-    register_checkpointed(out)
-    return out
-
-
-def scratch_checkpoint_eager(df: DataFrame) -> DataFrame:
-    """`.transform(scratch_checkpoint_eager)` chain helper."""
-    return scratch_checkpoint(df, eager=True)
-
-
-def register_checkpointed(df: DataFrame) -> DataFrame:
-    """Register an ALREADY locally-checkpointed frame for epoch-based
-    release (iterative operators checkpoint per round themselves and
-    register only the final state they return)."""
-    jrdd = _checkpoint_jrdd(df)
-    if jrdd is not None:
-        with _LOCK:
-            # keep `df` alive alongside: if the caller drops the frame,
-            # py4j must not GC the RDD handle before release sees it
-            _ENTRIES.append([_EPOCH, "ckpt", (jrdd, df), 0])
-    return df
+    try:
+        # the analyzed plan of a localCheckpoint'ed Dataset is a LogicalRDD
+        jrdd = out._jdf.queryExecution().analyzed().rdd()
+    except Exception:
+        return out  # unexpected plan shape: leave it untracked
+    return _register(out, jrdd)
 
 
 def _has_blocks(jrdd) -> bool:
-    """True iff the RDD currently holds cached/checkpoint blocks.
+    """True iff the RDD currently holds checkpoint blocks.
     (isLocallyCheckpointed is true from the moment the RDD is MARKED,
     before any action materializes it — unpersisting at that point
     would poison the plan's first execution, so block presence is the
     release gate.)"""
     rid = jrdd.id()
     infos = jrdd.sparkContext().getRDDStorageInfo()
-    for i in range(len(infos)):
-        if infos[i].id() == rid:
-            return True
-    return False
+    return any(infos[i].id() == rid for i in range(len(infos)))
 
 
-def release_checkpoint_now(df: DataFrame) -> None:
-    """Immediately drop a checkpointed frame's blocks — for iterative
-    loops where round N's eager checkpoint supersedes round N-1's
-    (the new blocks are already materialized, so the old table is
-    provably dead inside the operator)."""
-    jrdd = _checkpoint_jrdd(df)
-    if jrdd is None:
-        return
+def _drop(entry: list[Any]) -> bool:
+    """Release one entry's scratch; False if it is an unmaterialized
+    checkpoint (nothing to drop yet)."""
+    _, df, jrdd, _ = entry
     try:
-        if _has_blocks(jrdd):
+        if jrdd is None:
+            df.unpersist()
+        elif _has_blocks(jrdd):
             jrdd.unpersist(False)
+        else:
+            return False
     except Exception:
+        # a dead/stopped session (tests tear sessions down) must not
+        # fail the next query's build
         pass
+    return True
+
+
+def release_now(df: DataFrame) -> None:
+    """Drop a registered frame's scratch and its registry entry at once:
+    for iterative loops whose round N checkpoint supersedes round N-1's
+    (the old table is provably dead inside the operator). A frame that
+    was never registered is left alone."""
+    with _LOCK:
+        mine = [e for e in _ENTRIES if e[1] is df]
+        _ENTRIES[:] = [e for e in _ENTRIES if e[1] is not df]
+    for entry in mine:
+        _drop(entry)
+
+
+def _shared(entry: list[Any], live: list[list[Any]]) -> bool:
+    """True iff a live persist registration has the same plan. The
+    CacheManager matched both persists to ONE cache (bench best-of-2
+    run 2, or q199 after q178), so unpersisting this handle would drop
+    the live registration's cache too."""
+    try:
+        return any(k[2] is None and k[1].sameSemantics(entry[1]) for k in live)
+    except Exception:
+        return False
 
 
 def _release(epoch_cutoff: int) -> None:
     with _LOCK:
-        keep: list[list[Any]] = []
-        to_drop: list[list[Any]] = []
-        for entry in _ENTRIES:
-            if entry[0] <= epoch_cutoff:
-                to_drop.append(entry)
-            else:
-                keep.append(entry)
-        _ENTRIES[:] = keep
+        to_drop = [e for e in _ENTRIES if e[0] <= epoch_cutoff]
+        _ENTRIES[:] = [e for e in _ENTRIES if e[0] > epoch_cutoff]
+        live = list(_ENTRIES)
     deferred: list[list[Any]] = []
     for entry in to_drop:
-        _, kind, payload, defers = entry
-        try:
-            if kind == "cache":
-                payload.unpersist()
-            else:
-                jrdd, _df = payload
-                if _has_blocks(jrdd):
-                    jrdd.unpersist(False)
-                elif defers < MAX_DEFERS:
-                    # never materialized -> holds no blocks yet; keep
-                    # the registration so blocks created by a LATE
-                    # first action are still released by a later sweep
-                    entry[3] = defers + 1
-                    deferred.append(entry)
-        except Exception:
-            # a dead/stopped session (tests tear sessions down) must
-            # not fail the next query's build
-            pass
+        if entry[2] is None and _shared(entry, live):
+            continue  # the newest registration of the plan releases it
+        if _drop(entry):
+            continue
+        if entry[3] < MAX_DEFERS:
+            # never materialized -> holds no blocks yet; keep the
+            # registration so blocks created by a LATE first action
+            # are still released by a later sweep
+            entry[3] += 1
+            deferred.append(entry)
+        else:
+            log.warning(
+                "dropping registration of checkpoint RDD %s: not "
+                "materialized after %d epoch sweeps",
+                entry[2].id(),
+                MAX_DEFERS,
+            )
     if deferred:
         with _LOCK:
             _ENTRIES.extend(deferred)
 
 
-def new_epoch(tag: str | None = None) -> int:
+def new_epoch() -> int:
     """Advance the declared-query epoch and release scratch registered
     KEEP_EPOCHS or more epochs ago. Called by the suite registry at
-    the start of every declared query's builder.
-
-    When `tag` is given (the query name), CONSECUTIVE builds of the
-    SAME query share one epoch: the bench's best-of-2 rebuilds each
-    spec back-to-back, and its stated methodology ("the first
-    execution pays one-off costs that are not plan properties") keeps
-    run 2 warm — run 2 re-matching run 1's still-registered scratch in
-    the CacheManager is the same disclosed semantics as the q178
-    sparse-tf slot (accepted r10/r11). The leak this module fixes is
-    ACCUMULATION ACROSS DIFFERENT queries, which is what epoch
-    advancement tracks."""
-    global _EPOCH, _LAST_TAG
+    the start of every declared query's builder."""
+    global _EPOCH
     with _LOCK:
-        if tag is not None and tag == _LAST_TAG:
-            return _EPOCH
-        _LAST_TAG = tag
         _EPOCH += 1
         epoch = _EPOCH
     _release(epoch - KEEP_EPOCHS)

@@ -23,8 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.hygiene import (
-    register_checkpointed,
-    release_checkpoint_now,
+    release_now,
+    scratch_checkpoint,
     scratch_persist,
 )
 from nyc_etl_pipeline_spark.functions import md5_long, round_half_up
@@ -1191,6 +1191,11 @@ def neardup_clusters(
     current edges; nothing driver-side except the fixpoint check.
     Each round localCheckpoints to truncate lineage.
 
+    Lifetime: the returned plan reads the final round's checkpoint,
+    which the hygiene epoch registry releases KEEP_EPOCHS declared-query
+    builds after this call; run or materialize the result before then
+    (a later re-execution fails on the missing checkpoint blocks).
+
     large-star: every node u links its LARGER neighbors to
       m(u) = min(N(u) ∪ {u});
     small-star: every node u (on the >=-oriented edge list) links its
@@ -1205,7 +1210,7 @@ def neardup_clusters(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
         .dropDuplicates()
-        .localCheckpoint()
+        .transform(scratch_checkpoint)
     )
     for _ in range(CC_MAX_ROUNDS):
         # ---- large-star on the symmetric view -------------------------
@@ -1233,12 +1238,12 @@ def neardup_clusters(
             ss.filter(F.col("a") != F.col("b"))
             .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
             .dropDuplicates()
-            .localCheckpoint()  # truncate per-round lineage
+            .transform(scratch_checkpoint)  # truncate per-round lineage
         )
         fixpoint = e2.exceptAll(e).union(e.exceptAll(e2)).isEmpty()
         # the fixpoint probe was this round's action: the previous
         # edge table's checkpoint blocks are now provably dead
-        release_checkpoint_now(e)
+        release_now(e)
         e = e2
         if fixpoint:
             break
@@ -1249,8 +1254,6 @@ def neardup_clusters(
             f"large-star/small-star did not converge in {CC_MAX_ROUNDS} rounds"
         )
     # at fixpoint: stars rooted at component minima -> rep = min neighbor
-    # (the final edge checkpoint feeds the returned plan -> epoch-released)
-    register_checkpointed(e)
     rep = e.groupBy(F.col("v").alias("node")).agg(F.min("u").alias("rep"))
     return (
         nodes.select(F.col(id_col).alias("node"))

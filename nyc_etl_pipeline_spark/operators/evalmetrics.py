@@ -176,6 +176,11 @@ def roc_auc(
         balance. Costs one extra scan of `df` for the quantile probe.
 
     Returns (group..., n_pos, n_neg, auc rounded 6).
+
+    Lifetime: the ungrouped plan reads a localCheckpoint-ed table
+    that the hygiene epoch registry releases KEEP_EPOCHS declared-query
+    builds after this call; run or materialize the result before then
+    (a later re-execution fails on the missing checkpoint blocks).
     """
     gcols = group_cols or []
     lab = F.col(label_col).cast("bigint")
@@ -265,6 +270,11 @@ def roc_curve(
 
     Returns (group..., score, n_pos, n_neg, tpr, fpr), descending
     points implied by score order.
+
+    Lifetime: the returned plan reads a localCheckpoint-ed table
+    that the hygiene epoch registry releases KEEP_EPOCHS declared-query
+    builds after this call; run or materialize the result before then
+    (a later re-execution fails on the missing checkpoint blocks).
     """
     gcols = group_cols or []
     lab = F.col(label_col).cast("bigint")
@@ -382,6 +392,11 @@ def average_precision(
     never the shuffle, sort, or cumulative pass.
 
     Returns (group..., n_pos, n_neg, ap rounded 6).
+
+    Lifetime: the ungrouped plan reads a localCheckpoint-ed table
+    that the hygiene epoch registry releases KEEP_EPOCHS declared-query
+    builds after this call; run or materialize the result before then
+    (a later re-execution fails on the missing checkpoint blocks).
     """
     gcols = group_cols or []
     lab = F.col(label_col).cast("bigint")
@@ -606,6 +621,11 @@ def spearman_corr(
     where either variable is constant get NULL (undefined).
 
     Returns (group..., n, rho rounded 6).
+
+    Lifetime: the ungrouped plan reads a localCheckpoint-ed table
+    that the hygiene epoch registry releases KEEP_EPOCHS declared-query
+    builds after this call; run or materialize the result before then
+    (a later re-execution fails on the missing checkpoint blocks).
     """
     gcols = group_cols or []
     df = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
@@ -1021,6 +1041,11 @@ def multiclass_eval(
     table is lazily localCheckpoint-ed: it feeds two branches, and
     without lineage truncation each would re-analyze and re-shuffle
     the corpus (the kendall_tau lesson).
+
+    Lifetime: the returned plan reads a localCheckpoint-ed table
+    that the hygiene epoch registry releases KEEP_EPOCHS declared-query
+    builds after this call; run or materialize the result before then
+    (a later re-execution fails on the missing checkpoint blocks).
     """
     gcols = group_cols or []
     cells = (
@@ -1090,6 +1115,11 @@ def cohen_kappa(
     lineage truncation each branch would re-analyze AND re-shuffle
     the corpus (the kendall_tau lesson; here it also turns three
     corpus-scale aggregates into one).
+
+    Lifetime: the returned plan reads a localCheckpoint-ed table
+    that the hygiene epoch registry releases KEEP_EPOCHS declared-query
+    builds after this call; run or materialize the result before then
+    (a later re-execution fails on the missing checkpoint blocks).
     """
     gcols = group_cols or []
     base = df.filter(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
@@ -1203,6 +1233,11 @@ def kendall_tau(
     quantile bucketing keeps kernel inputs balanced unless one x value
     dominates (then its bucket's kernel is the bottleneck, same cliff
     as capped_sessionize's per-key window).
+
+    Lifetime: the returned plan reads a localCheckpoint-ed table
+    that the hygiene epoch registry releases KEEP_EPOCHS declared-query
+    builds after this call; run or materialize the result before then
+    (a later re-execution fails on the missing checkpoint blocks).
     """
     from decimal import Decimal
 

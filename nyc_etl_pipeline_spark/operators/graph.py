@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_etl_pipeline_spark.hygiene import (
-    register_checkpointed,
-    release_checkpoint_now,
+    release_now,
+    scratch_checkpoint,
     scratch_persist,
 )
 
@@ -208,13 +208,31 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     )
 
 
+def _kcore_round(e: DataFrame, alive: DataFrame, k: int) -> DataFrame:
+    """One peel round: drop the deg<k nodes and decrement each
+    survivor's degree by its removed neighbours (incident edges only)."""
+    removed = alive.filter(F.col("deg") < k).select("node")
+    dec = (
+        e.join(removed, e.src == removed.node)
+        .groupBy(F.col("dst").alias("dnode"))
+        .agg(F.count(F.lit(1)).alias("dec"))
+    )
+    return (
+        alive.filter(F.col("deg") >= k)
+        .join(dec, alive.node == dec.dnode, "left")
+        .select(
+            "node",
+            (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0))).alias("deg"),
+        )
+    )
+
+
 def kcore_peel(
     edges: DataFrame,
     k: int,
     n_rounds: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Fixed-round k-core peeling: run `n_rounds` rounds of "drop every
     node whose current degree < k, keep only edges between survivors"
@@ -247,47 +265,26 @@ def kcore_peel(
     per round (it references itself through the decrement join — the
     round-6 deep-DAG lesson); fixpoint (no removals) exits early,
     which the fixed-round oracle mirrors as identity rounds.
+
+    Lifetime: the returned plan reads the final round's checkpoint,
+    which the hygiene epoch registry releases KEEP_EPOCHS declared-query
+    builds after this call; run or materialize the result before then
+    (a later re-execution fails on the missing checkpoint blocks).
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if checkpoint:
-        e = e.transform(scratch_persist)
-    alive = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    if checkpoint:
-        alive = alive.localCheckpoint(eager=True)
-    for _ in range(n_rounds):
-        prev_alive = alive
-        removed = alive.filter(F.col("deg") < k).select("node")
-        # checkpoint=False keeps the full lazy plan — ONLY for
-        # plan-shape tests (the self-referencing tree growth makes it
-        # unusable beyond a couple of rounds); it also skips the
-        # fixpoint probe, which needs an action.
-        if checkpoint and removed.isEmpty():
-            break
-        dec = (
-            e.join(removed, e.src == removed.node)
-            .groupBy(F.col("dst").alias("dnode"))
-            .agg(F.count(F.lit(1)).alias("dec"))
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
+    try:
+        alive = scratch_checkpoint(
+            e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg")),
+            eager=True,
         )
-        alive = (
-            alive.filter(F.col("deg") >= k)
-            .join(dec, alive.node == dec.dnode, "left")
-            .select(
-                "node",
-                (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0))).alias("deg"),
-            )
-        )
-        if checkpoint:
-            alive = alive.localCheckpoint(eager=True)
-            # the new eager checkpoint is materialized: the previous
-            # round's node table is provably dead — drop its blocks now
-            release_checkpoint_now(prev_alive)
-    if checkpoint:
+        for _ in range(n_rounds):
+            if alive.filter(F.col("deg") < k).isEmpty():
+                break
+            prev = alive
+            alive = scratch_checkpoint(_kcore_round(e, alive, k), eager=True)
+            release_now(prev)  # superseded by the materialized round
+    finally:
         e.unpersist()
-        # the final node-table checkpoint feeds the returned plan;
-        # released with the epoch sweep after the caller's action
-        register_checkpointed(alive)
     # deg > 0: a truncated (non-converged) peel can leave a survivor
     # with every neighbor removed; the edge-list formulation (and the
     # oracle's terminal per-src count) has no row for it
@@ -318,12 +315,51 @@ def sql_kcore_chain(e0_name: str, k_sql: str, n_rounds: int) -> str:
     return ",\n".join(parts)
 
 
+def _lp_edges(
+    edges: DataFrame, src: str, dst: str, n_partitions: int | None
+) -> DataFrame:
+    """label_propagation's static edge list, hash-partitioned on src."""
+    # the static edge list is PRE-SHUFFLED on the join key: each round
+    # joins e.src == labels.node, and a cached hash-partitioning on
+    # src satisfies the join's required distribution, so only the
+    # nodes-sized label table moves per round — a bare persist()
+    # re-exchanged all |E| rows every round (200M-edge A/B in
+    # BASELINE.md round 8). CAVEAT that makes n_partitions matter:
+    # a join that consumes a cached distribution has no AQE shuffle
+    # boundary left to right-size, so the session default (32) at
+    # 200M edges means 6M-row sort-merge tasks — measured OOM where
+    # the un-cached plan survived via AQE splitting. Size n_partitions
+    # to the edge volume (~1M edge rows per partition) at scale.
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    if n_partitions:
+        return e.repartition(n_partitions, F.col("src"))
+    return e.repartition(F.col("src"))
+
+
+def _lp_round(e: DataFrame, labels: DataFrame) -> DataFrame:
+    """One synchronous round: every node adopts its neighbours' most
+    frequent label, ties to the smallest."""
+    neigh = (
+        e.join(labels, e.src == labels.node)
+        .groupBy(F.col("dst").alias("nd"), "label")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    return (
+        neigh.groupBy("nd")
+        .agg(
+            F.min(
+                F.struct((-F.col("cnt")).alias("nc"), F.col("label").alias("l"))
+            ).alias("m")
+        )
+        .select(F.col("nd").alias("node"), F.col("m.l").alias("label"))
+    )
+
+
 def label_propagation(
     edges: DataFrame,
     n_rounds: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Synchronous label propagation (community detection), fixed
@@ -344,57 +380,25 @@ def label_propagation(
     against the (nodes-sized) label table, one two-key partial-agg
     groupBy, one per-node min — all co-partitionable on the node key;
     localCheckpoint per round keeps the lineage flat across rounds.
+
+    Lifetime: the returned plan reads the final round's checkpoint,
+    which the hygiene epoch registry releases KEEP_EPOCHS declared-query
+    builds after this call; run or materialize the result before then
+    (a later re-execution fails on the missing checkpoint blocks).
     """
-    # the static edge list is PRE-SHUFFLED on the join key: each round
-    # joins e.src == labels.node, and a cached hash-partitioning on
-    # src satisfies the join's required distribution, so only the
-    # nodes-sized label table moves per round — a bare persist()
-    # re-exchanged all |E| rows every round (200M-edge A/B in
-    # BASELINE.md round 8). CAVEAT that makes n_partitions matter:
-    # a join that consumes a cached distribution has no AQE shuffle
-    # boundary left to right-size, so the session default (32) at
-    # 200M edges means 6M-row sort-merge tasks — measured OOM where
-    # the un-cached plan survived via AQE splitting. Size n_partitions
-    # to the edge volume (~1M edge rows per partition) at scale.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    e = e.repartition(n_partitions, F.col("src")) if n_partitions else e.repartition(
-        F.col("src")
-    )
-    if checkpoint:
-        e = e.persist()
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    for _ in range(n_rounds):
-        prev_labels = labels
-        neigh = (
-            e.join(labels, e.src == labels.node)
-            .groupBy(F.col("dst").alias("nd"), "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
+    e = _lp_edges(edges, src, dst, n_partitions).persist()
+    try:
         labels = (
-            neigh.groupBy("nd")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("nc"), F.col("label").alias("l")
-                    )
-                ).alias("m")
-            )
-            .select(F.col("nd").alias("node"), F.col("m.l").alias("label"))
+            e.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
         )
-        # checkpoint=False (plan-shape tests only) keeps the lazy plan
-        if checkpoint:
-            labels = labels.localCheckpoint(eager=True)
-            # previous round's label checkpoint is superseded — the new
-            # eager checkpoint no longer depends on it
-            release_checkpoint_now(prev_labels)
-    if checkpoint:
+        for _ in range(n_rounds):
+            prev = labels
+            labels = scratch_checkpoint(_lp_round(e, labels), eager=True)
+            release_now(prev)  # superseded by the materialized round
+    finally:
         e.unpersist()
-        # final label checkpoint backs the returned plan -> epoch sweep
-        register_checkpointed(labels)
     return labels
 
 

@@ -33,20 +33,14 @@ class QuerySpec:
 def _with_epoch(fn: Callable[[SparkSession, str], DataFrame]):
     """Wrap a query builder so every declared-query invocation starts a
     new scratch epoch: hygiene.new_epoch() releases the persist/
-    localCheckpoint scratch registered KEEP_EPOCHS builds ago (the r12
-    degradation probe traced the suite-wide progressive slowdown to
-    exactly this unreleased accumulation — and the leaked CacheManager
-    entries silently warmed the bench's second best-of-2 run)."""
+    localCheckpoint scratch registered KEEP_EPOCHS builds ago."""
     import functools
 
     from nyc_etl_pipeline_spark import hygiene
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # tag = query name: back-to-back rebuilds of the SAME query
-        # (bench best-of-2) share an epoch; a DIFFERENT query advances
-        # it and releases stale scratch (see hygiene.new_epoch).
-        hygiene.new_epoch(getattr(fn, "__name__", None))
+        hygiene.new_epoch()
         return fn(spark, sf_dir)
 
     return wrapped

@@ -659,24 +659,26 @@ def test_incremental_neardup_candidate_bounded_verification(spark, sf_dir):
 
 
 def test_graph_iteration_rounds_are_equi_joins(spark, sf_dir):
-    """One un-truncated round of q162's peel and q163's propagation
-    (checkpoint=False exposes the lazy plan the per-round
-    localCheckpoint normally hides): every join must be an equi
-    hash/merge join — semi-joins against the survivor set and the
-    label-table join are all keyed on a node id, so a
-    CartesianProduct or BroadcastNestedLoopJoin means the round went
-    quadratic in nodes."""
+    """One round of q162's peel and q163's propagation (the per-round
+    functions, whose lazy plan the operators' localCheckpoint normally
+    hides): every join must be an equi hash/merge join — semi-joins
+    against the survivor set and the label-table join are all keyed on
+    a node id, so a CartesianProduct or BroadcastNestedLoopJoin means
+    the round went quadratic in nodes."""
+    from pyspark.sql import functions as F
+
     from nyc_etl_pipeline_spark.operators.graph import (
-        kcore_peel,
-        label_propagation,
+        _kcore_round,
+        _lp_edges,
+        _lp_round,
     )
     from nyc_etl_pipeline_spark.suite.graphq import KCORE_K, _kcore_edges
 
     edges = _kcore_edges(spark, sf_dir)
-    for df in (
-        kcore_peel(edges, KCORE_K, 1, checkpoint=False),
-        label_propagation(edges, 1, checkpoint=False),
-    ):
+    alive = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+    e = _lp_edges(edges, "src", "dst", None)
+    labels = e.select(F.col("src").alias("node"), F.col("src").alias("label")).distinct()
+    for df in (_kcore_round(edges, alive, KCORE_K), _lp_round(e, labels)):
         plan = P.explain_str(df, "simple")
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -689,17 +691,20 @@ def test_graph_iteration_rounds_are_equi_joins(spark, sf_dir):
 
 def test_label_propagation_requests_src_distribution(spark, sf_dir):
     """label_propagation pre-shuffles the static edge list on src (the
-    per-round join key) so the checkpointed cache holds that
+    per-round join key) so the cached edge table holds that
     distribution and rounds move only the label table (the 200M-edge
     A/B in BASELINE round 8). The reuse itself is a cache-runtime
     property a tiny-fixture plan can't show (labels get broadcast
-    here); what IS structural: the operator must emit the explicit
+    here); what IS structural: a round's plan must carry the explicit
     REPARTITION_BY_COL exchange on src that the cache materializes."""
-    from nyc_etl_pipeline_spark.operators.graph import label_propagation
+    from pyspark.sql import functions as F
+
+    from nyc_etl_pipeline_spark.operators.graph import _lp_edges, _lp_round
     from nyc_etl_pipeline_spark.suite.graphq import _kcore_edges
 
-    edges = _kcore_edges(spark, sf_dir)
-    plan = P.explain_str(label_propagation(edges, 1, checkpoint=False), "simple")
+    e = _lp_edges(_kcore_edges(spark, sf_dir), "src", "dst", None)
+    labels = e.select(F.col("src").alias("node"), F.col("src").alias("label")).distinct()
+    plan = P.explain_str(_lp_round(e, labels), "simple")
     assert "REPARTITION_BY_COL" in plan, plan
     assert "hashpartitioning(src" in plan, plan
 
